@@ -31,25 +31,35 @@ Spark-first replacements:
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin_frame
+
 _ASOF_OPS = {">=", ">", "<=", "<"}
 
-# Surrogate-keyed dimension cache: (dim identity, order key, id col) ->
-# the banded-row-number frame. A dimension is keyed ONCE per session
-# and then serves every link against it — the reference's dims carry a
-# persistent auto-increment id, so re-deriving the surrogate per link
-# call both wastes the banding's two bounded-metadata jobs
-# (localCheckpoint + per-partition-count collect, ~0.3 s fixed
-# overhead each) and mismatches how a conformed dimension deploys.
-# The key mirrors similarity._corpus_identity: backing file list AND
-# semantic plan hash (files alone collide across filters/projections
-# of the same parquet; the hash alone collides across in-place
-# rewrites). Values hold a pinned (localCheckpoint) frame whose blocks
-# survive release_caches() and are GC-reclaimed when evicted here —
-# dim-sized storage, so clear_surrogate_cache() exists for tests and
-# for re-keying after a dimension rewrite in place.
+# Keyed-dimension cache: (kind, applicationId, input-file identity,
+# plan hash, key columns, id col) -> a PINNED frame of stored values. A
+# dimension is keyed ONCE per session and then serves every link
+# against it — the reference's dims carry a persistent auto-increment
+# id, so re-deriving the surrogate per link call both re-runs the
+# banding (range exchange, sort, window) and mismatches how a
+# conformed dimension deploys. Two kinds of value are served:
+#   "surrogate": with_surrogate_id's keyed frame (every dim row + id);
+#   "link":      link's (key -> first id) lookup over that keyed frame,
+#                so a repeat link broadcasts stored rows with no
+#                shuffle on the dimension side.
+# The key identifies the input by each backing file's (path, size,
+# mtime) AND the semantic plan hash: files alone collide across
+# filters/projections of the same parquet, the hash alone collides
+# across in-place rewrites, and file names alone miss a dimension
+# rewritten under the same names — the stored ids would then be stale
+# join keys. Pinned (localCheckpoint) blocks survive release_caches()
+# and are GC-reclaimed once evicted here; clear_surrogate_cache()
+# exists for tests and long-lived sessions.
 _SURROGATE_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -57,6 +67,39 @@ def clear_surrogate_cache() -> int:
     n = len(_SURROGATE_CACHE)
     _SURROGATE_CACHE.clear()
     return n
+
+
+def _file_identity(uri: str, jvm, hconf) -> tuple:
+    """(path, size, mtime) of one input file, read now: os.stat for
+    local files (nanosecond mtime), the Hadoop FileSystem otherwise."""
+    if uri.startswith("file:"):
+        st = os.stat(unquote(urlparse(uri).path))
+        return (uri, st.st_size, st.st_mtime_ns)
+    path = jvm.org.apache.hadoop.fs.Path(uri)
+    st = path.getFileSystem(hconf).getFileStatus(path)
+    return (uri, st.getLen(), st.getModificationTime())
+
+
+def _served(kind: str, dim: DataFrame, cols: tuple, id_col: str, build) -> DataFrame:
+    """Serve the pinned ``build()`` for ``dim`` from _SURROGATE_CACHE,
+    building and pinning it on the first call."""
+    sc = dim.sparkSession.sparkContext
+    hconf = sc._jsc.hadoopConfiguration()
+    key = (
+        kind,
+        # applicationId scopes entries to the live SparkContext: a
+        # stop()/recreate cycle in-process would otherwise serve
+        # localCheckpoint frames that reference a dead context.
+        sc.applicationId,
+        tuple(_file_identity(f, sc._jvm, hconf) for f in sorted(dim.inputFiles())),
+        dim.semanticHash(),
+        cols,
+        id_col,
+    )
+    hit = _SURROGATE_CACHE.get(key)
+    if hit is None:
+        hit = _SURROGATE_CACHE[key] = pin_frame(build())
+    return hit
 
 
 def with_surrogate_id(
@@ -71,31 +114,25 @@ def with_surrogate_id(
     collect, intra-partition window — identical values to
     ``row_number() OVER (ORDER BY ...)`` with NO single-partition
     stage, so the same call is safe on a 25-row nation dim and on a
-    billion-row conformed dimension. (The former max_rows guard is
-    gone: there is no single-task bottleneck left to guard against.)
+    billion-row conformed dimension.
 
-    Keyed frames are served from the module cache on repeat calls for
-    the same (dim, order, id_col) — see _SURROGATE_CACHE above.
+    The keyed frame is pinned (ids stored, not re-derived) and served
+    from the module cache on repeat calls for the same (dim, order,
+    id_col) — see _SURROGATE_CACHE above.
     """
     from .ranking import global_row_number
 
     cols = [order_by] if isinstance(order_by, str) else list(order_by)
-    key = (
-        "surrogate",
-        # applicationId scopes entries to the live SparkContext: a
-        # stop()/recreate cycle in-process would otherwise serve
-        # localCheckpoint frames that reference a dead context.
-        dim.sparkSession.sparkContext.applicationId,
-        tuple(sorted(dim.inputFiles())),
-        dim.semanticHash(),
-        tuple(cols),
-        id_col,
+    return _served(
+        "surrogate", dim, tuple(cols), id_col,
+        lambda: global_row_number(dim, [F.col(c) for c in cols], out_col=id_col),
     )
-    hit = _SURROGATE_CACHE.get(key)
-    if hit is None:
-        hit = global_row_number(dim, [F.col(c) for c in cols], out_col=id_col)
-        _SURROGATE_CACHE[key] = hit
-    return hit
+
+
+def _first_id_lookup(dim: DataFrame, child_field: str, id_col: str) -> DataFrame:
+    """(key -> min id) per dimension key: first-match on duplicate keys
+    (deterministic)."""
+    return dim.groupBy(F.col(child_field).alias("__lk")).agg(F.min(id_col).alias("__lid"))
 
 
 def link(
@@ -114,13 +151,17 @@ def link(
     ``row[field]`` (easy_etl/__init__.py:133-135).
     """
     out = name or field
-    if id_col not in dim.columns:
+    if id_col in dim.columns:
+        lookup = _first_id_lookup(dim, child_field, id_col)
+    else:
         # reference dims always carry an auto-increment id (README.md:
         # 180, created by the tool's own loads); a raw dim without one
-        # gets a deterministic surrogate keyed by the lookup field.
-        dim = with_surrogate_id(dim, child_field, id_col)
-    # first-match on duplicate dim keys: min id per key (deterministic).
-    lookup = dim.groupBy(F.col(child_field).alias("__lk")).agg(F.min(id_col).alias("__lid"))
+        # gets a deterministic surrogate keyed by the lookup field, and
+        # its lookup is served stored like the keyed frame itself.
+        lookup = _served(
+            "link", dim, (child_field,), id_col,
+            lambda: _first_id_lookup(with_surrogate_id(dim, child_field, id_col), child_field, id_col),
+        )
     joined = fact.join(F.broadcast(lookup), fact[field] == F.col("__lk"), "left")
     if out == field:
         joined = joined.drop(field)

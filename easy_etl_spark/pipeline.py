@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .functions.transforms import TransformPipeline, apply_transform
 from .operators.links import asof_link, link
+from .session import pin_frame
 from .sources import readers
 from .sources.sinks import ParquetSink
 
@@ -165,63 +166,66 @@ class EtlPipeline:
     # ---- action ---------------------------------------------------
     def load(self, sink: ParquetSink, upsert_fields: list[str] | None = None,
              ensure: bool | None = None, safe: bool = False) -> None:
-        """Single action: compile → distributed write → reset
+        """Single action: compile → pin → distributed write → reset
         (easy_etl/__init__.py:31-44).
 
+        The compiled frame is evaluated ONCE: ``session.pin_frame``
+        materializes it into executor storage and truncates its lineage
+        before anything reads it. Expectations, the row count, the empty
+        gate and the sink (its ``dense_ids`` count and its write) then
+        all read the same stored batch, so the extract, middleware,
+        Python UDFs and link joins run once per load, and a
+        non-deterministic step (a sampling middleware, a JDBC source
+        that changes between reads) cannot hand the id count and the
+        write different rows.
+
+        The pinned batch is also cached for the duration of the load.
+        A pinned frame's planner statistics are the compiled plan's
+        estimates, in which every link join multiplies its inputs'
+        sizes; the cache gives the planner the batch's real size, so an
+        upsert still broadcasts a small batch instead of shuffling the
+        table. The cache is unpersisted when ``load`` returns or
+        raises; the pinned blocks are reclaimed by Spark's
+        ContextCleaner once the frame is garbage-collected after that
+        (``session.reclaim_blocks()`` forces it promptly).
+
         Observability parity with the reference's tqdm rows/sec display
-        (easy_etl/__init__.py:33-40): row counts ride the write itself
-        via ``Observation`` accumulator metrics — NO extra job, no
-        second scan, unlike a ``.count()`` — and land in
-        ``last_load_metrics`` (rows_loaded, wall_seconds,
-        rows_per_sec). Per-stage detail remains the Spark UI's job.
+        (easy_etl/__init__.py:33-40): the count that fills the cache is
+        the row count, so ``last_load_metrics`` (rows_loaded,
+        wall_seconds, rows_per_sec) is exact for every sink, and taken
+        before the write — a read-modify-write pipeline (JDBC extract
+        from the table being loaded) never sees post-load state.
+        Per-stage detail remains the Spark UI's job.
         """
         import time
 
-        from pyspark.sql import Observation
+        df = pin_frame(self.dataframe()).persist()
+        try:
+            rows = df.count()
+            if self._expectations:
+                from .operators.quality import run_checks
 
-        df = self.dataframe()
-        if self._expectations:
-            from .operators.quality import run_checks
-
-            report = run_checks([f(df) for f in self._expectations]).collect()
-            failed = [r for r in report if not r.passed]
-            if failed:
-                detail = ", ".join(f"{r.check_name}={r.n_violations}" for r in failed)
-                raise ValueError(f"load aborted: data-quality checks failed: {detail}")
-        if df.isEmpty():
-            # truthiness gate: empty resultsets skip the write entirely
-            # (easy_etl/__init__.py:37)
-            self.last_load_metrics = {
-                "rows_loaded": 0, "wall_seconds": 0.0, "rows_per_sec": 0.0,
-            }
-            self._reset()
-            return
-        pre_rows: int | None = None
-        if getattr(sink, "observes_writes", True):
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows_loaded"))
-        else:
-            # sinks whose writer never completes a CollectMetrics row
-            # (JDBC runs the plan via rdd.foreachPartition) are counted
-            # ONCE, BEFORE the load: a recount afterwards would re-read
-            # the extract source, and for a read-modify-write pipeline
-            # (JDBC extract from the table being loaded) that second
-            # read observes post-load state and misreports the count
-            obs = None
-            pre_rows = df.count()
-        t0 = time.monotonic()
-        if upsert_fields:
-            sink.upsert(df, upsert_fields, ensure=ensure, safe=safe)
-        else:
-            sink.append(df, ensure=ensure, safe=safe)
-        wall = time.monotonic() - t0
-        if obs is not None:
-            try:
-                rows = int(obs.get["rows_loaded"])
-            except Exception:
-                rows = df.count()
-        else:
-            rows = pre_rows
+                report = run_checks([f(df) for f in self._expectations]).collect()
+                failed = [r for r in report if not r.passed]
+                if failed:
+                    detail = ", ".join(f"{r.check_name}={r.n_violations}" for r in failed)
+                    raise ValueError(f"load aborted: data-quality checks failed: {detail}")
+            if rows == 0:
+                # truthiness gate: empty resultsets skip the write entirely
+                # (easy_etl/__init__.py:37)
+                self.last_load_metrics = {
+                    "rows_loaded": 0, "wall_seconds": 0.0, "rows_per_sec": 0.0,
+                }
+                self._reset()
+                return
+            t0 = time.monotonic()
+            if upsert_fields:
+                sink.upsert(df, upsert_fields, ensure=ensure, safe=safe)
+            else:
+                sink.append(df, ensure=ensure, safe=safe)
+            wall = time.monotonic() - t0
+        finally:
+            df.unpersist()
         self.last_load_metrics = {
             "rows_loaded": rows,
             "wall_seconds": round(wall, 3),

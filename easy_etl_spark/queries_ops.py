@@ -63,10 +63,9 @@ def load_drop_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def load_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O16: Observation-based load metrics (rows ride the write itself,
-    no second scan — pipeline.py load()). rows_loaded comes from the
-    accumulator, rows_on_disk from reading the sink back; the oracle
-    pins both to the source count."""
+    """O16: load metrics (rows_loaded is the count of the batch the
+    load pinned — pipeline.py load()), rows_on_disk from reading the
+    sink back; the oracle pins both to the source count."""
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
     sink = _tmp_sink(spark, "metrics")
     p = EtlPipeline(spark)

@@ -242,7 +242,10 @@ def pin_frame(df: DataFrame) -> DataFrame:
     lineage to re-run — every later action reads the same stored
     blocks — and the blocks are reclaimed by the ContextCleaner when
     the frame is garbage-collected, so release_caches() stays safe to
-    call at any time (it never touches pins).
+    call at any time (it never touches pins). The same pin makes
+    pipeline.EtlPipeline.load evaluate its batch once (the id count
+    and the write see the same rows) and makes operators/links.py
+    serve stored surrogate ids.
 
     Cluster caveat: localCheckpoint blocks are UNREPLICATED executor
     storage with truncated lineage — losing an executor that holds

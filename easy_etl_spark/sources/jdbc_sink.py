@@ -46,13 +46,6 @@ class JdbcSink:
     ensure/drop-sync/surrogate ids). Table names should be simple
     unquoted identifiers (stored uppercase by most engines)."""
 
-    # the JDBC writer runs the plan via rdd.foreachPartition, which
-    # never completes a CollectMetrics (Observation) row — the
-    # pipeline must pre-count for load metrics instead of observing
-    # (and must NOT recount after the load, when a read-modify-write
-    # extract would already see post-load state)
-    observes_writes = False
-
     #: rename-DDL template per JDBC subprotocol (the token after
     #: "jdbc:" in the URL). None => the engine has no usable rename and
     #: _swap_write goes straight to the staged-overwrite fallback.

@@ -11,18 +11,26 @@ Reference parity (exit99/easy-etl):
   - auto-increment surrogate ``id`` (easy_etl/README.md:180)
 
 Spark-first design: the per-row INSERT/UPSERT loop becomes one
-distributed columnar write. Upsert-without-a-transactional-format is
-expressed as ``target.join(src, keys, "left_anti").unionByName(src)``
-then an atomic directory swap — the same logical plan a Delta MERGE
-compiles to (minus the transaction log). On a real deployment this
-class is swapped for Delta/Iceberg MERGE; the interface is format-
-agnostic on purpose.
+distributed columnar write, and every write lands through a staging
+dir that is atomically swapped in.
 
-Scale notes: the anti-join shuffles on the upsert keys — that is the
-unavoidable shuffle of any merge. Surrogate ids use a partition-offset
-scheme (zipWithIndex-style via ``row_number`` over a cheap order or
-``monotonically_increasing_id``) rather than a global single-partition
-window.
+Cost of each write:
+  - append whose columns and types (with ``id``) equal the table's:
+    O(batch). Only the batch is written to staging; the existing data
+    files and their checksum sidecars are hard-linked in (one link per
+    file, no bytes copied) before the swap.
+  - append that changes the schema (new or dropped columns, retyped
+    columns): one full union rewrite.
+  - upsert: one full rewrite, ``target.join(src, keys, "left_anti")
+    .unionByName(src)``, the same logical plan a Delta MERGE compiles
+    to (minus the transaction log). The anti-join shuffles on the
+    upsert keys; that is the unavoidable shuffle of any merge.
+On a real deployment this class is swapped for Delta/Iceberg; the
+interface is format-agnostic on purpose.
+
+Surrogate ids use a partition-offset scheme (``dense_ids``): one
+numPartitions-row count, then a per-row projection — no shuffle and no
+global single-partition window.
 """
 
 from __future__ import annotations
@@ -31,45 +39,47 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def dense_ids(df: DataFrame, id_col: str = "id", offset: int = 0) -> DataFrame:
-    """Dense sequential ids starting at ``offset + 1`` without a global
-    single-partition window (the naive ``row_number() OVER (ORDER BY
-    ...)`` funnels every row through one task — fatal at scale).
+#: ``monotonically_increasing_id()`` packs the partition id into the
+#: upper 31 bits and the row's index within its partition into the
+#: lower 33.
+_ROW_INDEX_MASK = (1 << 33) - 1
 
-    Scheme (zipWithIndex in DataFrame terms): count rows per partition
-    (a tiny numPartitions-row aggregate), prefix-sum the counts on the
-    driver, then id = partition's start + intra-partition row_number.
-    The only window is partitioned by ``spark_partition_id`` — embar-
-    rassingly parallel. Requires a deterministic input plan (the frame
-    is evaluated twice); parquet-backed lineage qualifies.
+
+def dense_ids(df: DataFrame, id_col: str = "id", offset: int = 0) -> DataFrame:
+    """Dense sequential ids ``offset + 1 .. offset + N`` with no shuffle
+    (zipWithIndex in DataFrame terms).
+
+    One numPartitions-row job counts the rows of each partition; the
+    driver prefix-sums the counts into partition starts; then
+    ``id = start + (monotonically_increasing_id & (2^33 - 1)) + 1`` is a
+    plain projection. The naive ``row_number() OVER (ORDER BY ...)``
+    funnels every row through one task, and a window partitioned by
+    partition id still costs an Exchange and a Sort.
+
+    Requires a deterministic input: the frame is evaluated twice (the
+    count, then the consumer) and both must see the same partitions.
+    Parquet-backed lineage and pinned frames (``session.pin_frame``,
+    which ``EtlPipeline.load`` applies) qualify.
     """
-    part = df.withColumn("__pid", F.spark_partition_id()).withColumn(
-        "__ord", F.monotonically_increasing_id()
+    counts = (
+        df.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
     )
-    counts = {
-        r["__pid"]: r["n"]
-        for r in part.groupBy("__pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    starts: dict[int, int] = {}
+    if not counts:  # empty frame: id column still has to exist
+        return df.select(F.lit(None).cast("long").alias(id_col), "*")
+    starts: list = []
     acc = offset
-    for pid in sorted(counts):
-        starts[pid] = acc
-        acc += counts[pid]
-    if not starts:  # empty frame: id column still has to exist
-        return df.withColumn(id_col, F.lit(None).cast("long")).select(id_col, *df.columns)
-    start_map = F.create_map(
-        *[lit for pid, s in starts.items() for lit in (F.lit(pid), F.lit(s))]
-    )
-    w = Window.partitionBy("__pid").orderBy("__ord")
-    return (
-        part.withColumn(id_col, F.row_number().over(w) + start_map[F.col("__pid")])
-        .drop("__pid", "__ord")
-        .select(id_col, *df.columns)
-    )
+    for r in sorted(counts, key=lambda r: r["p"]):
+        starts += [F.lit(r["p"]), F.lit(acc)]
+        acc += r["n"]
+    start = F.create_map(*starts)[F.spark_partition_id()]
+    row = F.monotonically_increasing_id().bitwiseAND(F.lit(_ROW_INDEX_MASK))
+    return df.select((start + row + 1).alias(id_col), "*")
 
 
 class ParquetSink:
@@ -158,12 +168,19 @@ class ParquetSink:
         return dense_ids(df, self.id_col, offset)
 
     # -- writes -----------------------------------------------------
-    def _swap_write(self, df: DataFrame) -> None:
+    def _swap_write(self, df: DataFrame, keep_existing: bool = False) -> None:
         """Write to a staging dir then swap it in — needed because the
         plan may read the same path it replaces. The old table is moved
         aside (rename, atomic) before staging moves in, so a crash at
         any point leaves either the old or the new table on disk, never
-        neither; the leftover ``.__old`` dir is garbage-collectable."""
+        neither; the leftover ``.__old`` dir is garbage-collectable.
+
+        ``keep_existing=True`` makes ``df`` an addition: the current
+        table's files are hard-linked into staging after the write, so
+        the swapped-in table holds both. Data files are immutable once
+        written (every later write replaces directories, never files),
+        so sharing inodes with the moved-aside table or a retained
+        snapshot is safe."""
         staging = f"{self.path}.__staging_{uuid.uuid4().hex[:8]}"
         if self.cluster_by:
             cols = [F.col(c) for c in self.cluster_by]
@@ -171,7 +188,13 @@ class ParquetSink:
         writer = df.write.mode("overwrite")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(staging)
+        try:
+            writer.parquet(staging)
+            if keep_existing:
+                self._link_files_into(staging)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
         if self.keep_versions > 0:
             vs = self.versions()
             old = self._version_path((vs[-1] if vs else 0) + 1)
@@ -194,6 +217,19 @@ class ParquetSink:
             else:
                 shutil.rmtree(old)
 
+    def _link_files_into(self, staging: str) -> None:
+        """Hard-link every data file of the current table, and its
+        ``.<name>.crc`` checksum sidecar, into the same relative path
+        under ``staging`` (partition directories included)."""
+        for root, _dirs, files in os.walk(self.path):
+            rel = os.path.relpath(root, self.path)
+            for f in files:
+                if not (f.endswith(".parquet") or f.endswith(".parquet.crc")):
+                    continue
+                dst_dir = os.path.join(staging, rel)
+                os.makedirs(dst_dir, exist_ok=True)
+                os.link(os.path.join(root, f), os.path.join(dst_dir, f))
+
     def append(self, df: DataFrame, ensure: bool | None = None, safe: bool = False) -> None:
         """Append-insert load (easy_etl/__init__.py:96).
 
@@ -201,6 +237,12 @@ class ParquetSink:
         union, like dataset's ensure). ensure=False → incoming frame is
         restricted to existing target columns. safe=False → drop-sync
         stale target columns (easy_etl/__init__.py:97-99,113-117).
+
+        When the incoming columns and types (with ``id``) equal the
+        table's, ``ensure`` and drop-sync have nothing to change, and
+        the append writes only the batch: O(batch) plus one hard link
+        per existing file (see ``_swap_write``). Any other schema is a
+        full union rewrite.
         """
         current = self.read()
         if current is None:
@@ -209,22 +251,8 @@ class ParquetSink:
         offset_row = current.agg(F.max(self.id_col).alias("m")).first()
         offset = offset_row["m"] or 0
         incoming = self._with_ids(df, offset)
-
-        # partitioned fast path: when no schema sync is requested and
-        # the schema already matches, append only the touched partition
-        # directories instead of rewriting the table — the difference
-        # between O(batch) and O(table) work on a 100 TB target.
-        if (
-            self.partition_by
-            and safe
-            and ensure is not False
-            and dict(incoming.dtypes) == dict(current.dtypes)  # names AND types
-        ):
-            out = incoming.select(*current.columns)
-            if self.cluster_by:
-                cols = [F.col(c) for c in self.cluster_by]
-                out = out.repartitionByRange(*cols).sortWithinPartitions(*cols)
-            out.write.mode("append").partitionBy(*self.partition_by).parquet(self.path)
+        if dict(incoming.dtypes) == dict(current.dtypes):  # names AND types
+            self._swap_write(incoming.select(*current.columns), keep_existing=True)
             return
 
         keep_current = current

@@ -268,9 +268,9 @@ def test_missing_sql_file_raises(spark):
 
 
 def test_load_metrics_observed(spark, tmp_path):
-    # O16: rows/sec observability rides the write (Observation
-    # accumulators — no second scan), parity with the reference's tqdm
-    # display (easy_etl/__init__.py:33-40)
+    # O16: rows/sec observability from the count of the pinned batch,
+    # parity with the reference's tqdm display
+    # (easy_etl/__init__.py:33-40)
     sink = ParquetSink(spark, str(tmp_path / "t"))
     pipe = EtlPipeline(spark)
     pipe.extract("SELECT n_name FROM nation").load(sink)

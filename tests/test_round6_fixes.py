@@ -169,7 +169,6 @@ def test_jdbc_load_metrics_precount(spark, jdbc_url):
     src = spark.createDataFrame([Row(k=i, v=str(i)) for i in range(7)])
     src.createOrReplaceTempView("r6_metrics_src")
     sink = JdbcSink(spark, jdbc_url, "T_METRICS", driver=DRIVER)
-    assert sink.observes_writes is False
     p = EtlPipeline(spark)
     p.extract("SELECT * FROM r6_metrics_src")
     p.load(sink)
